@@ -31,6 +31,7 @@ from dask_deltalake_spark.delta.protocol import (
     DeltaProtocolError,
     Metadata,
     now_ms,
+    quote_path,
     resolve_file_path,
 )
 from dask_deltalake_spark.delta.writer import write_commit
@@ -98,14 +99,12 @@ def shallow_clone(
             created_time=ts,
         ).to_json(),
     ]
-    from urllib.parse import quote
-
     for a in snap.add_actions:
         d = a.to_json()["add"]
         # absolutize against the SOURCE root (an already-absolute path
         # — a clone of a clone — resolves through unchanged); the log
         # carries URL-encoded paths, '/' kept
-        d["path"] = quote(resolve_file_path(src_log.table_path, a.path))
+        d["path"] = quote_path(resolve_file_path(src_log.table_path, a.path))
         actions.append({"add": d})
     # row-tracking domain metadata (the id high water mark) carries
     # over so a tracked clone keeps allocating non-overlapping ranges
@@ -304,11 +303,9 @@ def deep_clone(
             created_time=ts,
         ).to_json(),
     ]
-    from urllib.parse import quote
-
     for a in snap.add_actions:
         d = a.to_json()["add"]
-        d["path"] = quote(rels[a.path].replace(os.sep, "/"))
+        d["path"] = quote_path(rels[a.path].replace(os.sep, "/"))
         actions.append({"add": d})
     for domain, conf in snap.domain_metadata.items():
         actions.append(

@@ -370,9 +370,11 @@ class DeltaLog:
         (manifest + `sidecar` actions pointing into `_sidecars/` —
         the v2Checkpoint table feature; the manifest is bounded and
         the add/remove bulk lives in independently-readable sidecars,
-        which is what lets a distributed replayer fan the read out)."""
+        which is what lets a distributed replayer fan the read out).
+        Rows decode column-wise through delta/checkpoint.py."""
         import pyarrow.parquet as pq
-        from urllib.parse import unquote
+
+        from dask_deltalake_spark.delta.checkpoint import CheckpointActions
 
         parts = []
         v2_manifests = []
@@ -394,148 +396,16 @@ class DeltaLog:
         if v2_manifests and not parts:
             # any complete manifest serves; take the newest name
             parts = [v2_manifests[-1]]
-        adds: dict[str, AddAction] = {}
-        removes: dict[tuple, RemoveAction] = {}  # (path, dv_unique_id)
-        metadata: Optional[Metadata] = None
-        protocol: Optional[Protocol] = None
-        domains: dict[str, str] = {}
-        txns: dict[str, int] = {}
-        sidecars: list[str] = []
-
-        def _parsed_stats_json(sp) -> Optional[str]:
-            """delta-spark `delta.checkpoint.writeStatsAsStruct`
-            checkpoints may carry ONLY a typed ``stats_parsed`` struct
-            (``writeStatsAsJson=false`` drops the JSON twin entirely) —
-            reading ``stats`` alone silently degrades data skipping on
-            such foreign tables. Re-serialize the struct to the JSON
-            stats shape: dates/timestamps isoformat (the JSON stats
-            spelling), decimals to float, unknown/None leaves dropped
-            (absent == unknown == skipped conservatively, the r13
-            foreign-stats precedent). A row without stats surfaces as
-            an all-null struct via pyarrow — the numRecords gate
-            filters it (every real Delta stats blob carries it)."""
-            if not sp or sp.get("numRecords") is None:
-                return None
-            import datetime
-            import decimal
-
-            def conv(v):
-                if isinstance(v, dict):
-                    out = {}
-                    for k, x in v.items():
-                        cx = conv(x)
-                        if cx is not None:
-                            out[k] = cx
-                    return out
-                if isinstance(v, (datetime.datetime, datetime.date)):
-                    return v.isoformat()
-                if isinstance(v, decimal.Decimal):
-                    return float(v)
-                if isinstance(v, bytes):
-                    return None
-                return v
-
-            blob = {"numRecords": int(sp["numRecords"])}
-            for k in ("minValues", "maxValues", "nullCount"):
-                if sp.get(k) is not None:
-                    blob[k] = conv(sp[k])
-            return json.dumps(blob)
-
-        def consume(row) -> None:
-            nonlocal metadata, protocol
-            if row.get("sidecar") and row["sidecar"].get("path"):
-                sidecars.append(row["sidecar"]["path"])
-            elif row.get("add"):
-                a = row["add"]
-                path = unquote(a["path"])
-                dv = a.get("deletionVector")
-                if dv is not None and dv.get("storageType") is None:
-                    dv = None  # all-null struct from a DV-less row
-                brid = a.get("baseRowId")
-                drcv = a.get("defaultRowCommitVersion")
-                atags = a.get("tags")
-                adds[path] = AddAction(
-                    path=path,
-                    size=int(a.get("size") or 0),
-                    partition_values=dict(a.get("partitionValues") or {}),
-                    modification_time=int(a.get("modificationTime") or 0),
-                    data_change=bool(a.get("dataChange", True)),
-                    stats=(
-                        a.get("stats")
-                        or _parsed_stats_json(a.get("stats_parsed"))
-                    ),
-                    deletion_vector=dv,
-                    base_row_id=int(brid) if brid is not None else None,
-                    default_row_commit_version=(
-                        int(drcv) if drcv is not None else None
-                    ),
-                    tags=dict(atags) if atags else None,
-                )
-            elif row.get("remove"):
-                r = row["remove"]
-                path = unquote(r["path"])
-                rdv = r.get("deletionVector")
-                if rdv is not None and rdv.get("storageType") is None:
-                    rdv = None  # null struct from a checkpoint row
-                # pyarrow maps round-trip to_pylist as (k, v) tuples
-                rtags = r.get("tags")
-                rpv = r.get("partitionValues")
-                rsize = r.get("size")
-                removes[(path, dv_unique_id(rdv))] = RemoveAction(
-                    path=path,
-                    deletion_timestamp=int(r.get("deletionTimestamp") or 0),
-                    deletion_vector=rdv,
-                    tags=dict(rtags) if rtags else None,
-                    partition_values=dict(rpv) if rpv is not None else None,
-                    size=int(rsize) if rsize is not None else None,
-                )
-            elif row.get("metaData") and row["metaData"].get("id") is not None:
-                metadata = Metadata.from_json(row["metaData"])
-            elif row.get("protocol") and row["protocol"].get(
-                "minReaderVersion"
-            ) is not None:
-                protocol = Protocol.from_json(row["protocol"])
-            elif row.get("domainMetadata") and row["domainMetadata"].get(
-                "domain"
-            ) is not None:
-                dm = row["domainMetadata"]
-                # A removal TOMBSTONE (removed=true) must not read as a
-                # live domain: delta-spark retains domain-metadata
-                # tombstones in its checkpoints, so a foreign
-                # checkpoint row with removed=true previously
-                # RESURRECTED the deleted domain here while the JSON
-                # commit path (consume_json below) correctly dropped
-                # it — the two replay paths disagreed on the same
-                # logical state. Mirror the JSON path exactly.
-                if dm.get("removed"):
-                    domains.pop(dm["domain"], None)
-                else:
-                    domains[dm["domain"]] = dm.get("configuration") or ""
-            elif row.get("txn") and row["txn"].get("appId") is not None:
-                t = row["txn"]
-                # LATEST-wins, not max: the spec's reconciliation rule
-                # (delta-spark and delta-rs both overwrite), and the
-                # difference matters — an app that legitimately RESETS
-                # its version (streaming checkpoint reset reusing the
-                # appId at 0) must not be pinned to the old high mark,
-                # or every post-reset idempotent batch is silently
-                # skipped (r13). Our checkpoints carry one row per
-                # appId; a foreign multi-row file resolves in row
-                # order, matching delta-rs's read order.
-                txns[t["appId"]] = int(t.get("version") or 0)
-
+        acc = CheckpointActions()
         for part in parts:
             with self.store.open_input(part) as fh:
-                tbl = pq.read_table(fh)
-            for row in tbl.to_pylist():
-                consume(row)
-        for sc in sidecars:
-            scp = os.path.join(self.log_path, SIDECAR_DIR, sc)
+                acc.consume(pq.read_table(fh))
+        # a sidecar naming further sidecars extends the list mid-loop
+        for sc in acc.sidecars:
+            scp = os.path.join(self.log_path, SIDECAR_DIR, sc["path"])
             with self.store.open_input(scp) as fh:
-                tbl = pq.read_table(fh)
-            for row in tbl.to_pylist():
-                consume(row)
-        return adds, removes, metadata, protocol, domains, txns
+                acc.consume(pq.read_table(fh))
+        return acc.state()
 
     def snapshot(
         self,
@@ -828,8 +698,8 @@ class DeltaLog:
                 app = t.get("appId")
                 if app is not None:
                     # latest-wins per the spec's reconciliation rule —
-                    # see the checkpoint-parse twin above for why max
-                    # was wrong (version-reset apps)
+                    # see the checkpoint decoder (delta/checkpoint.py)
+                    # for why max was wrong (version-reset apps)
                     txns[app] = int(t.get("version", 0))
 
         # Log-compaction files (spec: Log Compaction Files): a range

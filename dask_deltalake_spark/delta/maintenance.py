@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import dataclasses
 import json
+import logging
 import os
 from typing import Optional
 
@@ -36,6 +37,8 @@ from dask_deltalake_spark.delta.protocol import (
     now_ms,
 )
 from dask_deltalake_spark.delta.writer import write_commit
+
+_log = logging.getLogger("dask_deltalake_spark")
 
 HISTORY_COLUMNS = [
     "timestamp",
@@ -384,7 +387,8 @@ def create_checkpoint(
     not O(table) — the capability sidecars exist for."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from urllib.parse import quote
+
+    from dask_deltalake_spark.delta import checkpoint as ckpt
 
     table_path = str(path).rstrip("/")
     log = DeltaLog(table_path)
@@ -408,44 +412,6 @@ def create_checkpoint(
             )
     snap = log.snapshot(version=version)
 
-    rows = []
-    # Protocol.to_json carries readerFeatures/writerFeatures when the
-    # table uses a v3/v7 feature-list protocol — dropping them from
-    # the checkpoint would silently downgrade the gate on
-    # checkpoint-started replays.
-    rows.append(snap.protocol.to_json())
-    meta = snap.metadata
-    rows.append(
-        {
-            "metaData": {
-                "id": meta.id,
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": meta.schema_string,
-                "partitionColumns": meta.partition_columns,
-                "configuration": meta.configuration,
-                "createdTime": meta.created_time,
-            }
-        }
-    )
-    for a in snap.add_actions:
-        rows.append(
-            {
-                "add": {
-                    "path": quote(a.path),
-                    "partitionValues": a.partition_values,
-                    "size": a.size,
-                    "modificationTime": a.modification_time,
-                    "dataChange": False,
-                    "stats": a.stats,
-                    "deletionVector": a.deletion_vector,
-                    "baseRowId": a.base_row_id,
-                    "defaultRowCommitVersion": a.default_row_commit_version,
-                    # foreign add tags survive our checkpoint (spec
-                    # `tags` on add actions — un-gated; VERDICT r12 #3)
-                    "tags": a.tags,
-                }
-            }
-        )
     # the FULL (path, dvId)-keyed tombstone set: superseded-vector
     # removes whose path is live again must survive a
     # checkpoint-anchored replay or their bins lose retention
@@ -478,23 +444,24 @@ def create_checkpoint(
     # this to inclusive: dropping at the boundary is the dangerous
     # direction. The shared _configured_retention_hours ladder keeps
     # the WINDOW identical; only the boundary millisecond differs.
-    # Backfill map for tombstones missing partitionValues/size: a
-    # superseded-VECTOR remove's path is live again under a new dvId,
-    # so the live add describes the SAME physical parquet file — its
-    # partitionValues and size are the removed entry's by
-    # construction. Backfilling at checkpoint time lets such a
+    # Backfill tombstones missing partitionValues/size from the live
+    # add (snap.files): a superseded-VECTOR remove's path is live
+    # again under a new dvId, so the live add describes the SAME
+    # physical parquet file — its partitionValues and size are the
+    # removed entry's by construction. Backfilling at checkpoint time lets such a
     # tombstone (e.g. a tags-only replay-archive remove parsed from a
     # pre-r12 checkpoint) legitimately claim extendedFileMetadata, so
     # a strict foreign engine re-serializing our checkpoint keeps its
     # tags instead of dropping un-gated fields (ADVICE r12).
-    _live_adds = {a.path: a for a in snap.add_actions}
+    adds = snap.add_actions
+    removes = []
     for r in snap.tombstones_all:
         if r.deletion_timestamp and r.deletion_timestamp < _tomb_cutoff:
             continue
         if (r.partition_values is None or r.size is None) and (
-            r.path in _live_adds
+            r.path in snap.files
         ):
-            _a = _live_adds[r.path]
+            _a = snap.files[r.path]
             r = dataclasses.replace(
                 r,
                 partition_values=(
@@ -504,173 +471,21 @@ def create_checkpoint(
                 ),
                 size=r.size if r.size is not None else _a.size,
             )
-        rows.append(
-            {
-                "remove": {
-                    "path": quote(r.path),
-                    "deletionTimestamp": r.deletion_timestamp,
-                    "dataChange": False,
-                    "deletionVector": r.deletion_vector,
-                    # tags survive the checkpoint round-trip: the
-                    # replay-archive marker must stay distinguishable
-                    # from writer-stamped descriptor removes across a
-                    # checkpoint-anchored replay (log.py gate). The
-                    # flag semantics are single-sourced on the
-                    # RemoveAction property (ADVICE r11 / review r12:
-                    # claimed only when partitionValues AND size are
-                    # both present — flag-true with null
-                    # partitionValues is the malformed shape strict
-                    # engines reject). A one-field-only remove (a
-                    # foreign engine's asymmetric shape) emits the
-                    # present field UN-GATED, mirroring
-                    # RemoveAction.to_json (ADVICE r12).
-                    "extendedFileMetadata": r.extended_file_metadata,
-                    "partitionValues": r.partition_values,
-                    "size": r.size,
-                    "tags": r.tags,
-                }
-            }
-        )
-    # domain metadata survives checkpoint-started replays (the row-id
-    # high water mark lives here — dropping it would hand out
-    # duplicate row ids after a checkpoint)
-    for domain, conf in snap.domain_metadata.items():
-        rows.append(
-            {
-                "domainMetadata": {
-                    "domain": domain,
-                    "configuration": conf,
-                    "removed": False,
-                }
-            }
-        )
-    # txn high water marks survive too — dropping one would let a
-    # re-delivered idempotent batch slip through after a checkpoint
-    for app, ver in snap.transactions.items():
-        rows.append({"txn": {"appId": app, "version": int(ver)}})
-
-    cols = ["protocol", "metaData", "add", "remove", "domainMetadata", "txn"]
-    norm = [{c: row.get(c) for c in cols} for row in rows]
-    str_map = pa.map_(pa.string(), pa.string())
-    cp_schema = pa.schema(
-        [
-            pa.field(
-                "protocol",
-                pa.struct(
-                    [
-                        ("minReaderVersion", pa.int32()),
-                        ("minWriterVersion", pa.int32()),
-                        ("readerFeatures", pa.list_(pa.string())),
-                        ("writerFeatures", pa.list_(pa.string())),
-                    ]
-                ),
-            ),
-            pa.field(
-                "metaData",
-                pa.struct(
-                    [
-                        ("id", pa.string()),
-                        (
-                            "format",
-                            pa.struct(
-                                [("provider", pa.string()), ("options", str_map)]
-                            ),
-                        ),
-                        ("schemaString", pa.string()),
-                        ("partitionColumns", pa.list_(pa.string())),
-                        ("configuration", str_map),
-                        ("createdTime", pa.int64()),
-                    ]
-                ),
-            ),
-            pa.field(
-                "add",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("partitionValues", str_map),
-                        ("size", pa.int64()),
-                        ("modificationTime", pa.int64()),
-                        ("dataChange", pa.bool_()),
-                        ("stats", pa.string()),
-                        (
-                            "deletionVector",
-                            pa.struct(
-                                [
-                                    ("storageType", pa.string()),
-                                    ("pathOrInlineDv", pa.string()),
-                                    ("offset", pa.int32()),
-                                    ("sizeInBytes", pa.int32()),
-                                    ("cardinality", pa.int64()),
-                                ]
-                            ),
-                        ),
-                        ("baseRowId", pa.int64()),
-                        ("defaultRowCommitVersion", pa.int64()),
-                        ("tags", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            ),
-            pa.field(
-                "remove",
-                pa.struct(
-                    [
-                        ("path", pa.string()),
-                        ("deletionTimestamp", pa.int64()),
-                        ("dataChange", pa.bool_()),
-                        ("extendedFileMetadata", pa.bool_()),
-                        ("partitionValues", str_map),
-                        ("size", pa.int64()),
-                        (
-                            "deletionVector",
-                            pa.struct(
-                                [
-                                    ("storageType", pa.string()),
-                                    ("pathOrInlineDv", pa.string()),
-                                    ("offset", pa.int32()),
-                                    ("sizeInBytes", pa.int32()),
-                                    ("cardinality", pa.int64()),
-                                ]
-                            ),
-                        ),
-                        ("tags", pa.map_(pa.string(), pa.string())),
-                    ]
-                ),
-            ),
-            pa.field(
-                "domainMetadata",
-                pa.struct(
-                    [
-                        ("domain", pa.string()),
-                        ("configuration", pa.string()),
-                        ("removed", pa.bool_()),
-                    ]
-                ),
-            ),
-            pa.field(
-                "txn",
-                pa.struct(
-                    [
-                        ("appId", pa.string()),
-                        ("version", pa.int64()),
-                        ("lastUpdated", pa.int64()),
-                    ]
-                ),
-            ),
-        ]
+        removes.append(r)
+    # one checkpoint row per action; the non-file actions go first
+    # (protocol, metaData) and last (domainMetadata, txn) in the
+    # classic layout and make up the whole v2 manifest
+    meta_segments = [
+        ("protocol", ckpt.encode_protocol(snap.protocol)),
+        ("metaData", ckpt.encode_metadata(snap.metadata)),
+        ("domainMetadata", ckpt.encode_domains(snap.domain_metadata)),
+        ("txn", ckpt.encode_txns(snap.transactions)),
+    ]
+    n_rows = (
+        2 + len(adds) + len(removes)
+        + len(snap.domain_metadata) + len(snap.transactions)
     )
-    for row in norm:
-        for key in ("metaData", "add", "remove"):
-            if row.get(key):
-                d = row[key]
-                for mk in ("partitionValues", "configuration", "tags"):
-                    if mk in d and isinstance(d[mk], dict):
-                        d[mk] = list(d[mk].items())
-                if key == "metaData" and isinstance(
-                    d.get("format", {}).get("options"), dict
-                ):
-                    d["format"]["options"] = list(d["format"]["options"].items())
-    tbl = pa.Table.from_pylist(norm, schema=cp_schema)
+
     # Multi-part checkpoints (the spec's %020d.checkpoint.%010d.%010d
     # naming) above _CHECKPOINT_PART_ROWS actions: at the 10M-file
     # scale a single checkpoint parquet becomes a multi-GB driver
@@ -706,35 +521,7 @@ def create_checkpoint(
 
         from dask_deltalake_spark.delta.log import SIDECAR_DIR
 
-        meta_cols = ["protocol", "metaData", "domainMetadata", "txn"]
-        data_rows = [r for r in norm if r.get("add") or r.get("remove")]
-        meta_rows = [
-            {c: r.get(c) for c in meta_cols}
-            for r in norm
-            if not (r.get("add") or r.get("remove"))
-        ]
-        side_schema = pa.schema(
-            [cp_schema.field("add"), cp_schema.field("remove")]
-        )
-        sidecar_struct = pa.struct(
-            [
-                ("path", pa.string()),
-                ("sizeInBytes", pa.int64()),
-                ("modificationTime", pa.int64()),
-            ]
-        )
-        manifest_schema = pa.schema(
-            [cp_schema.field(c) for c in meta_cols]
-            + [
-                pa.field(
-                    "checkpointMetadata",
-                    pa.struct([("version", pa.int64())]),
-                ),
-                pa.field("sidecar", sidecar_struct),
-            ]
-        )
         sc_dir = os.path.join(table_path, LOG_DIR, SIDECAR_DIR)
-        none_meta = {c: None for c in meta_cols}
         # INCREMENTAL checkpointing (the capability v2 sidecars exist
         # for): a sidecar from the PREVIOUS v2 checkpoint is reused
         # verbatim when every row in it is an add that still describes
@@ -747,79 +534,76 @@ def create_checkpoint(
         # a shared sidecar is referenced by both manifests and
         # _gc_orphan_sidecars keeps it until no retained manifest
         # points at it.
-        reused_refs, covered = _reusable_sidecars(
-            log, snap.version, data_rows
+        sidecar_refs, covered = _reusable_sidecars(
+            log, snap.version, snap.files
         )
         if covered:
-            data_rows = [
-                r
-                for r in data_rows
-                if not (r.get("add") and r["add"]["path"] in covered)
-            ]
-        n_parts = max(1, -(-len(data_rows) // _CHECKPOINT_PART_ROWS))
-        per = -(-max(1, len(data_rows)) // n_parts)
-        sidecar_refs = list(reused_refs)
+            adds = [a for a in adds if a.path not in covered]
+        data = ckpt.stack(
+            ckpt.SIDECAR_FILE_SCHEMA,
+            [
+                ("add", ckpt.encode_adds(adds)),
+                ("remove", ckpt.encode_removes(removes)),
+            ],
+        )
+        n_parts = max(1, -(-data.num_rows // _CHECKPOINT_PART_ROWS))
+        per = -(-max(1, data.num_rows) // n_parts)
         for i in range(n_parts):
-            chunk = data_rows[i * per:(i + 1) * per]
-            if not chunk and sidecar_refs:
+            chunk = data.slice(i * per, per)
+            if not chunk.num_rows and sidecar_refs:
                 continue  # fully covered by reused sidecars
             sname = f"{_uuid.uuid4()}.parquet"
             sp = os.path.join(sc_dir, sname)
-            _put_parquet(
-                pa.Table.from_pylist(
-                    [
-                        {"add": r.get("add"), "remove": r.get("remove")}
-                        for r in chunk
-                    ],
-                    schema=side_schema,
-                ),
-                sp,
-            )
+            _put_parquet(chunk, sp)
             sidecar_refs.append(
                 {
-                    **none_meta,
-                    "checkpointMetadata": None,
-                    "sidecar": {
-                        "path": sname,
-                        "sizeInBytes": log.store.size(sp),
-                        "modificationTime": now_ms(),
-                    },
+                    "path": sname,
+                    "sizeInBytes": log.store.size(sp),
+                    "modificationTime": now_ms(),
                 }
             )
-        manifest_rows = (
-            [
-                {**r, "checkpointMetadata": None, "sidecar": None}
-                for r in meta_rows
-            ]
-            + [
-                {
-                    **none_meta,
-                    "checkpointMetadata": {"version": snap.version},
-                    "sidecar": None,
-                }
-            ]
-            + sidecar_refs
-        )
         cp_path = os.path.join(
             table_path,
             LOG_DIR,
             f"{snap.version:020d}.checkpoint.{_uuid.uuid4()}.parquet",
         )
         _put_parquet(
-            pa.Table.from_pylist(manifest_rows, schema=manifest_schema),
+            ckpt.stack(
+                ckpt.MANIFEST_SCHEMA,
+                meta_segments
+                + [
+                    (
+                        "checkpointMetadata",
+                        pa.array(
+                            [{"version": snap.version}],
+                            ckpt.CHECKPOINT_METADATA_TYPE,
+                        ),
+                    ),
+                    ("sidecar", pa.array(sidecar_refs, ckpt.SIDECAR_TYPE)),
+                ],
+            ),
             cp_path,
         )
         log.store.write_bytes(
             os.path.join(table_path, LOG_DIR, "_last_checkpoint"),
-            json.dumps(
-                {"version": snap.version, "size": len(norm)}
-            ).encode("utf-8"),
+            json.dumps({"version": snap.version, "size": n_rows}).encode(
+                "utf-8"
+            ),
         )
         return cp_path
 
-    last = {"version": snap.version, "size": len(rows)}
-    if len(rows) > _CHECKPOINT_PART_ROWS:
-        n_parts = -(-len(rows) // _CHECKPOINT_PART_ROWS)
+    tbl = ckpt.stack(
+        ckpt.CHECKPOINT_SCHEMA,
+        meta_segments[:2]
+        + [
+            ("add", ckpt.encode_adds(adds)),
+            ("remove", ckpt.encode_removes(removes)),
+        ]
+        + meta_segments[2:],
+    )
+    last = {"version": snap.version, "size": n_rows}
+    if n_rows > _CHECKPOINT_PART_ROWS:
+        n_parts = -(-n_rows // _CHECKPOINT_PART_ROWS)
         per = -(-tbl.num_rows // n_parts)
         cp_path = None
         for i in range(n_parts):
@@ -842,7 +626,6 @@ def create_checkpoint(
         json.dumps(last).encode("utf-8"),
     )
     return cp_path
-
 
 _ZORDER_BITS = 10  # 1024 buckets per dimension
 
@@ -1133,7 +916,15 @@ def _zorder_quantile_partition(
                 return _pd.Series(out.astype(_np.int32))
 
             return _z_range_token(F.col("__z"))
-        except Exception:
+        except ImportError as e:
+            # pandas UDFs need pandas + pyarrow on the driver: without
+            # them the placement falls back to the sampling exchange
+            # (same content, slower shuffle) — said once, not silently
+            _log.warning(
+                "z-order UDF range placement unavailable (%s); "
+                "OPTIMIZE falls back to the sampling range exchange",
+                e,
+            )
             return None
     toks = _zorder_range_tokens(len(bnds) + 1, n_out)
     if toks is None:
@@ -2266,6 +2057,7 @@ def _gc_orphan_sidecars(log: DeltaLog) -> None:
     checkpoint (each KB-scale)."""
     import pyarrow.parquet as pq
 
+    from dask_deltalake_spark.delta.checkpoint import CheckpointActions
     from dask_deltalake_spark.delta.log import (
         _CHECKPOINT_MULTIPART_RE,
         _CHECKPOINT_RE,
@@ -2275,7 +2067,7 @@ def _gc_orphan_sidecars(log: DeltaLog) -> None:
     sc_dir = os.path.join(log.log_path, SIDECAR_DIR)
     if not log.store.is_dir(sc_dir):
         return
-    referenced: set = set()
+    refs = CheckpointActions()
     for f in log.store.list_dir(log.log_path):
         m = _CHECKPOINT_RE.match(f)
         if m and m.group(2) and not _CHECKPOINT_MULTIPART_RE.match(
@@ -2285,13 +2077,10 @@ def _gc_orphan_sidecars(log: DeltaLog) -> None:
                 with log.store.open_input(
                     os.path.join(log.log_path, f)
                 ) as fh:
-                    rows = pq.read_table(fh, columns=["sidecar"]).to_pylist()
+                    refs.consume(pq.read_table(fh, columns=["sidecar"]))
             except Exception:
                 return  # unreadable manifest: never GC blindly
-            for row in rows:
-                sc = row.get("sidecar")
-                if sc and sc.get("path"):
-                    referenced.add(sc["path"])
+    referenced = {sc["path"] for sc in refs.sidecars}
     for f in log.store.list_dir(sc_dir):
         if f.endswith(".parquet") and f not in referenced:
             log.store.delete(os.path.join(sc_dir, f))
@@ -2807,54 +2596,17 @@ def fsck_repair(
     }
 
 
-def _canon_add(d: Optional[dict]) -> Optional[tuple]:
-    """Order-insensitive identity of one checkpoint add row, stable
-    across the dict→parquet→to_pylist round trip (map columns come
-    back as (k, v) tuple lists; absent DV structs come back all-None).
-    Two adds canonicalizing equal describe the same live file state —
-    the reuse criterion for incremental v2 checkpoints."""
-    if d is None:
-        return None
-    dv = d.get("deletionVector")
-    if dv is not None and dv.get("storageType") is None:
-        dv = None
-    pv = d.get("partitionValues") or []
-    if isinstance(pv, dict):
-        pv = list(pv.items())
-    return (
-        d.get("path"),
-        int(d.get("size") or 0),
-        int(d.get("modificationTime") or 0),
-        tuple(sorted((str(k), v) for k, v in pv)),
-        d.get("stats"),
-        tuple(sorted(dv.items())) if dv else None,
-        d.get("baseRowId"),
-        d.get("defaultRowCommitVersion"),
-        _canon_tags(d.get("tags")),
-    )
-
-
-def _canon_tags(tg) -> Optional[tuple]:
-    """Normalize an add's tags across the dict→parquet→to_pylist
-    round trip (maps come back as (k, v) tuple lists; a pre-r13
-    checkpoint has no tags column at all → None == empty)."""
-    if not tg:
-        return None
-    if isinstance(tg, dict):
-        tg = list(tg.items())
-    return tuple(sorted((str(k), v) for k, v in tg))
-
-
 def _reusable_sidecars(
-    log: DeltaLog, version: int, data_rows: list
-) -> tuple[list, list]:
+    log: DeltaLog, version: int, live: dict[str, AddAction]
+) -> tuple[list, set]:
     """Sidecars of the latest previous v2 checkpoint that can be
     referenced VERBATIM by the checkpoint being written at ``version``:
-    every row must be an add whose canonical form matches the current
-    live add for that path. Returns (manifest ref rows, covered
-    paths)."""
+    every row must be an add that, decoded, equals the current live
+    add for its path (``live``: path -> AddAction) in everything but
+    ``dataChange``. Returns (sidecar refs, covered paths)."""
     import pyarrow.parquet as pq
 
+    from dask_deltalake_spark.delta.checkpoint import CheckpointActions
     from dask_deltalake_spark.delta.log import (
         _CHECKPOINT_MULTIPART_RE,
         _CHECKPOINT_RE,
@@ -2863,7 +2615,7 @@ def _reusable_sidecars(
 
     prev = [v for v in log.checkpoint_versions() if v < version]
     if not prev:
-        return [], []
+        return [], set()
     pv = max(prev)
     manifest = None
     for f in sorted(log.store.list_dir(log.log_path)):
@@ -2876,61 +2628,38 @@ def _reusable_sidecars(
         ):
             manifest = os.path.join(log.log_path, f)
     if manifest is None:
-        return [], []  # previous checkpoint was classic-shaped
-    live = {
-        r["add"]["path"]: _canon_add(r["add"])
-        for r in data_rows
-        if r.get("add")
-    }
+        return [], set()  # previous checkpoint was classic-shaped
+    refs = CheckpointActions()
     try:
         with log.store.open_input(manifest) as fh:
-            refs = [
-                row["sidecar"]
-                for row in pq.read_table(
-                    fh, columns=["sidecar"]
-                ).to_pylist()
-                if row.get("sidecar") and row["sidecar"].get("path")
-            ]
+            refs.consume(pq.read_table(fh, columns=["sidecar"]))
     except Exception:
-        return [], []
-    reused, covered = [], []
-    meta_cols = ["protocol", "metaData", "domainMetadata", "txn"]
-    none_meta = {c: None for c in meta_cols}
-    seen: set = set(covered)
-    for ref in refs:
+        return [], set()
+    reused, covered = [], set()
+    for ref in refs.sidecars:
         scp = os.path.join(log.log_path, SIDECAR_DIR, ref["path"])
+        dec = CheckpointActions()
         try:
             with log.store.open_input(scp) as fh:
-                rows = pq.read_table(fh).to_pylist()
+                tbl = pq.read_table(fh)
+            dec.consume(tbl)
         except Exception:
             continue
-        paths = []
-        ok = bool(rows)
-        for row in rows:
-            a = row.get("add")
-            r = row.get("remove")
-            if r and r.get("path") is not None:
-                ok = False  # tombstones may have expired; rewrite
-                break
-            if not a or a.get("path") is None:
-                ok = False
-                break
-            p = a["path"]
-            if p in seen or live.get(p) != _canon_add(a):
-                ok = False
-                break
-            paths.append(p)
-        if ok:
-            seen.update(paths)
-            covered.extend(paths)
-            reused.append(
-                {
-                    **none_meta,
-                    "checkpointMetadata": None,
-                    "sidecar": dict(ref),
-                }
-            )
-    return reused, set(covered)
+        # every row a distinct add (a remove row, or a row decoding to
+        # nothing, leaves fewer adds than rows): tombstones may have
+        # expired since, so such sidecars are rewritten
+        if not tbl.num_rows or len(dec.adds) != tbl.num_rows:
+            continue
+        if all(
+            p not in covered
+            and p in live
+            and dataclasses.replace(a, data_change=live[p].data_change)
+            == live[p]
+            for p, a in dec.adds.items()
+        ):
+            covered.update(dec.adds)
+            reused.append(ref)
+    return reused, covered
 
 
 def generate_symlink_manifest(path: str) -> dict:

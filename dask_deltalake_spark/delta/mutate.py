@@ -45,6 +45,7 @@ from dask_deltalake_spark.delta.protocol import (
     now_ms,
     prune_by_stats,
     prune_partitions,
+    quote_path,
 )
 
 
@@ -136,7 +137,6 @@ def _empty_cdc_action(table_path: str, snap) -> dict:
     ``_write_change_data``'s empty-frame fallback."""
     import io as _io
     import uuid as _uuid
-    from urllib.parse import quote as _quote
 
     import pyarrow.parquet as _pq
     from pyspark.sql.types import StringType, StructField, StructType
@@ -159,7 +159,7 @@ def _empty_cdc_action(table_path: str, snap) -> dict:
     )
     return {
         "cdc": {
-            "path": _quote(f"_change_data/{rel}"),
+            "path": quote_path(f"_change_data/{rel}"),
             "partitionValues": {},
             "size": len(buf.getvalue()),
             "dataChange": False,
@@ -176,8 +176,6 @@ def _write_change_data(table_path: str, snap, change_data) -> list:
     fallback (an explicit empty cdc file pins "zero changes" — an
     absent action would make readers reconstruct the commit's file
     actions) all happen here."""
-    from urllib.parse import quote as _quote
-
     from dask_deltalake_spark.delta.protocol import stats_spec_for
     from dask_deltalake_spark.delta.writer import _spark_to_arrow_schema
 
@@ -231,7 +229,7 @@ def _write_change_data(table_path: str, snap, change_data) -> list:
     return [
         {
             "cdc": {
-                "path": _quote(f"_change_data/{r.path}"),
+                "path": quote_path(f"_change_data/{r.path}"),
                 "partitionValues": json.loads(r.partition_json),
                 "size": int(r.size),
                 "dataChange": False,

@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import json
 import math
+import re
 from dataclasses import dataclass, field
 from datetime import date, datetime, timezone
 from typing import Any, Iterable, Optional
-from urllib.parse import quote, unquote
+from urllib.parse import unquote
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 LOG_DIR = "_delta_log"
@@ -35,6 +36,26 @@ METADATA_ONLY_FEATURES = frozenset({
     "identityColumns", "rowTracking", "domainMetadata", "clustering",
     "changeDataFeed",
 })
+
+# ``urllib.parse.quote`` (safe="/") re-checks every character and falls
+# back to a per-byte loop on any string holding a character outside
+# its safe set — which every hive-partitioned path does (``=``).
+# quote_path encodes whole runs of unsafe characters at once; its
+# output is identical to ``quote(s)``, including the
+# UnicodeEncodeError on lone surrogates.
+_UNSAFE_RUN = re.compile(r"[^A-Za-z0-9_.\-~/]+")
+_PCT = [f"%{b:02X}" for b in range(256)]
+
+
+def _pct_encode(m: re.Match) -> str:
+    return "".join([_PCT[b] for b in m.group().encode("utf-8")])
+
+
+def quote_path(path: str) -> str:
+    """Percent-encode a data-file path for a log action's ``path``
+    field, byte-identical to ``urllib.parse.quote(path)``."""
+    return _UNSAFE_RUN.sub(_pct_encode, path)
+
 
 COLUMN_MAPPING_MODE_KEY = "delta.columnMapping.mode"
 COLUMN_MAPPING_MAX_ID_KEY = "delta.columnMapping.maxColumnId"
@@ -342,7 +363,7 @@ class AddAction:
 
     def to_json(self) -> dict[str, Any]:
         d: dict[str, Any] = {
-            "path": quote(self.path),
+            "path": quote_path(self.path),
             "partitionValues": {
                 k: (v if v is not None else None)
                 for k, v in self.partition_values.items()
@@ -451,7 +472,7 @@ class RemoveAction:
 
     def to_json(self) -> dict[str, Any]:
         d: dict[str, Any] = {
-            "path": quote(self.path),
+            "path": quote_path(self.path),
             "deletionTimestamp": self.deletion_timestamp,
             "dataChange": self.data_change,
         }

@@ -209,6 +209,36 @@ def test_zorder_udf_range_placement_past_tree_cap(spark, tmp_path, monkeypatch):
     assert _avg_span(ranges, "x") < 22 and _avg_span(ranges, "y") < 22
 
 
+def test_zorder_udf_placement_fallback_is_logged(
+    spark, monkeypatch, caplog
+):
+    """Past the comparison-tree cap, a session that cannot build the
+    pandas UDF (pandas/pyarrow missing: ImportError) keeps the
+    sampling-exchange fallback but says so with one warning on the
+    package logger."""
+    import logging
+
+    import pyspark.sql.functions as SF
+
+    from dask_deltalake_spark.delta.maintenance import (
+        _zorder_quantile_partition,
+    )
+
+    def _no_pandas(*_a, **_k):
+        raise ImportError("No module named 'pandas'")
+
+    monkeypatch.setenv("SPARK_GRAFT_ZORDER_QUANTILE_MIN_BYTES", "0")
+    monkeypatch.setenv("SPARK_GRAFT_ZORDER_QUANTILE_MAX_RANGES", "2")
+    monkeypatch.setattr(SF, "pandas_udf", _no_pandas)
+    dfz = spark.range(400).select(SF.col("id").alias("__z"))
+    with caplog.at_level(logging.WARNING, logger="dask_deltalake_spark"):
+        assert _zorder_quantile_partition(dfz, 4) is None
+    recs = [r for r in caplog.records if r.name == "dask_deltalake_spark"]
+    assert len(recs) == 1 and recs[0].levelno == logging.WARNING
+    assert "pandas" in recs[0].getMessage()
+    assert "sampling" in recs[0].getMessage()
+
+
 def test_zorder_bounds_from_stats_match_agg_and_fall_back(spark, tmp_path):
     """r16: the z-order bucketing bounds are served from the candidate
     files' own min/max stats (zero Spark jobs) whenever every file
